@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -36,19 +37,19 @@ object Transforms {
     df => df.withColumn(col0, translate(col(col0), chars, ""))
 
   /** `df[c].fillna(df[c].median())` (wine_etl_kaggle.py:77) — global exact
-    * median imputed into nulls. Implemented scale-safely as a 1-row
-    * aggregate broadcast-joined into the plan (no collect, no global
-    * window): the tiny aggregate is its own Spark job but the scalar flows
-    * through a BroadcastNestedLoopJoin of a single row. `exact=false`
-    * switches to approx_percentile for the 100 TB path (SURVEY §4.3).
+    * median imputed into nulls. Building the transform runs the median as
+    * one scalar aggregate and substitutes it as a literal, so later
+    * actions over the result reuse that value instead of re-running the
+    * aggregate inside their own plans. `exact=false` switches to
+    * approx_percentile for the 100 TB path (SURVEY §4.3).
     */
   def imputeMedian(col0: String, exact: Boolean = true): DataFrame => DataFrame = { df =>
     val med =
-      if (exact) df.agg(percentile(col(col0), lit(0.5)).as("__med"))
-      else df.agg(approx_percentile(col(col0), lit(0.5), lit(10000)).as("__med"))
-    df.crossJoin(broadcast(med))
-      .withColumn(col0, coalesce(col(col0), col("__med")))
-      .drop("__med")
+      if (exact) df.agg(percentile(col(col0), lit(0.5)))
+      else df.agg(approx_percentile(col(col0), lit(0.5), lit(10000)))
+    // the cast keeps the aggregate's result type when the median is null
+    val m = lit(med.collect().head.get(0)).cast(med.schema.head.dataType)
+    df.withColumn(col0, coalesce(col(col0), m))
   }
 
   /** `len(str(x)) if notnull else 0` (wine_etl_kaggle.py:81-82). */
@@ -85,16 +86,20 @@ object Transforms {
   /** `astype('category').cat.codes` (wine_etl_kaggle.py:90): dense int
     * codes assigned by sorted order of distinct values; null → -1.
     *
-    * Scale shape: codes are built by a range-partitioned sort of the
-    * distinct set followed by RDD `zipWithIndex` — contiguous global ids
-    * without an unpartitioned window, so a high-cardinality column (10⁶+
-    * distinct values, tested) never funnels through one partition.
-    * `zipWithIndex` costs one lightweight extra job (per-partition counts)
-    * over the distinct set only.
+    * `broadcastCodes` (default true — categorical by definition) builds
+    * the dictionary on the driver: one aggregate collects the sorted
+    * distinct values, and the code table goes back into the plan as a
+    * local relation broadcast-joined to the data. The broadcast ships the
+    * whole dictionary to every executor anyway, so holding it on the
+    * driver adds no scale limit, and an overflow fails before any data is
+    * joined.
     *
-    * `broadcastCodes` (default true — categorical by definition) hints the
-    * join back; pass false for high-cardinality dictionaries so the join
-    * shuffles instead of shipping the whole code table to every executor.
+    * `broadcastCodes = false` is the high-cardinality path (10⁶+ distinct
+    * values, tested): codes come from a range-partitioned sort of the
+    * distinct set followed by RDD `zipWithIndex` — contiguous global ids
+    * without an unpartitioned window, so the dictionary never funnels
+    * through one partition or the driver — and the join back shuffles.
+    *
     * `codeType` mirrors pandas' cat.codes dtype widening: ShortType
     * matches the reference's SMALLINT warehouse column, IntegerType for
     * dictionaries past 32k codes.
@@ -102,11 +107,8 @@ object Transforms {
   def dictEncode(src: String, dst: String, codeType: DataType = ShortType,
       broadcastCodes: Boolean = true): DataFrame => DataFrame = { df =>
     val spark = df.sparkSession
-    val distinctVals = df.select(col(src)).na.drop().distinct()
-    val srcField = distinctVals.schema.fields.head
-    val indexed = distinctVals.orderBy(col(src)).rdd.zipWithIndex().map {
-      case (r, i) => org.apache.spark.sql.Row(r.get(0), i)
-    }
+    val codeSchema = StructType(Seq(
+      df.schema(src), StructField("__code", LongType, nullable = false)))
     // fail loudly if the dictionary outgrows the code type (e.g. 40k
     // distinct values into ShortType): a silent wrap would collide with
     // the -1 null sentinel and assign duplicate codes
@@ -116,16 +118,32 @@ object Transforms {
       case IntegerType => Int.MaxValue.toLong
       case _           => Long.MaxValue
     }
-    val codes = spark.createDataFrame(indexed, StructType(Seq(
-        srcField, StructField("__code", LongType, nullable = false))))
-      .withColumn(dst,
-        when(col("__code") <= lit(maxCode), col("__code").cast(codeType))
-          .otherwise(raise_error(concat(
-            lit(s"dictEncode: dictionary exceeds ${codeType.simpleString} "
-              + "range at code "), col("__code").cast(StringType)))))
-      .drop("__code")
-    val codesHinted = if (broadcastCodes) broadcast(codes) else codes
-    df.join(codesHinted, Seq(src), "left")
+    val overflow = s"dictEncode: dictionary exceeds ${codeType.simpleString} range at code "
+    val codes =
+      if (broadcastCodes) {
+        // collect_set drops nulls but keeps NaN bit patterns apart, which
+        // array_distinct merges as distinct() does; array_sort orders by
+        // the column type's Spark ordering, as the shuffle path's sort does
+        val dict = df.agg(array_sort(array_distinct(collect_set(col(src)))))
+          .collect().head.getSeq[Any](0)
+        if (dict.length - 1L > maxCode)
+          throw new IllegalArgumentException(
+            s"$overflow${maxCode + 1} (${dict.length} distinct values of $src)")
+        broadcast(spark.createDataFrame(
+          dict.zipWithIndex.map { case (v, i) => Row(v, i.toLong) }.asJava,
+          codeSchema))
+      } else {
+        val indexed = df.select(col(src)).na.drop().distinct()
+          .orderBy(col(src)).rdd.zipWithIndex().map {
+            case (r, i) => Row(r.get(0), i)
+          }
+        spark.createDataFrame(indexed, codeSchema)
+          .withColumn("__code", when(col("__code") <= lit(maxCode), col("__code"))
+            .otherwise(raise_error(concat(lit(overflow),
+              col("__code").cast(StringType)))))
+      }
+    df.join(codes.withColumn(dst, col("__code").cast(codeType)).drop("__code"),
+        Seq(src), "left")
       .withColumn(dst, coalesce(col(dst), lit(-1).cast(codeType)))
   }
 

@@ -13,7 +13,8 @@ object WineMain {
       "usage: WineMain <wine.json> <warehouseDir> [--append]")
     val Array(json, out) = args.take(2)
     val append = args.contains("--append")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

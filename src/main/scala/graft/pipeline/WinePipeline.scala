@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -9,10 +10,12 @@ import graft.operators.{Transforms, Validation}
   * (SURVEY.md §2.A / §3; reference /root/reference/dags/wine_etl_kaggle.py).
   *
   * The reference runs extract → transform → validate → load → cleanup as
-  * five Airflow tasks exchanging CSV paths; here the chain is ONE lazy
-  * plan (Catalyst fuses transform+load into a single job) with exactly
-  * two extra actions: the median scalar aggregate and the validation
-  * report. The reference's semantics are preserved:
+  * five Airflow tasks exchanging CSV paths; here the chain is ONE plan
+  * run by ONE write (Catalyst fuses transform, validation and load into
+  * it). Only the two whole-column values the transform needs before any
+  * row can be written — the price median and the country dictionary —
+  * run as their own small aggregates, each collected to the driver as a
+  * constant. The reference's semantics are preserved:
   *   - validation is observational, never gating (wine_etl_kaggle.py:100)
   *   - the warehouse write is append by default but overwrite-able
   *     (`:199` if_exists='append' makes re-runs duplicate rows — kept as
@@ -115,32 +118,26 @@ object WinePipeline {
       jdbcTable: String = "wine_data",
       cleanupStagingDir: Option[String] = None,
       jdbcColumnTypes: String = warehouseColumnTypes): Result = {
-    val transformed = transform(extract(spark, jsonPath))
     // Validation is a side observation on the same data — evaluated, never
-    // gating (wine_etl_kaggle.py:100). Cache so validate+load share a scan,
-    // and MATERIALIZE the report while the cache (and the staged input)
-    // still exist — the report is O(#checks) rows, so pinning it locally
-    // is bounded regardless of data size.
-    transformed.cache()
-    try {
-      val report = Validation.validate(transformed, checks)
-      val reportRows = report.collect().toSeq
-      val materializedReport = spark.createDataFrame(
-        spark.sparkContext.parallelize(reportRows, 1), report.schema)
-      val mode = if (append) "append" else "overwrite"
-      jdbcUrl match {
-        case Some(url) =>
-          graft.sinks.Sinks.jdbcWrite(
-            transformed, url, jdbcTable, jdbcColumnTypes, mode)
-        case None =>
-          graft.sinks.Sinks.writeParquet(transformed, warehousePath, mode)
-      }
-      val n = transformed.count()
-      // cleanup AFTER the successful write, like the reference's final
-      // task; safe because the report no longer depends on the staged input
-      cleanupStagingDir.foreach(d => graft.sources.Staged.cleanup(spark, d))
-      Result(n, materializedReport)
-    } finally transformed.unpersist() // never leak cache on a failed write
+    // gating (wine_etl_kaggle.py:100). Its counters and the row count ride
+    // the write as observed metrics, so the data is scanned once, nothing
+    // is cached, and the report is bounded by #checks whatever the data size.
+    val observed = Validation.observe(transform(extract(spark, jsonPath)), checks)
+    val mode = if (append) "append" else "overwrite"
+    jdbcUrl match {
+      case Some(url) =>
+        graft.sinks.Sinks.jdbcWrite(
+          observed.data, url, jdbcTable, jdbcColumnTypes, mode)
+      case None =>
+        graft.sinks.Sinks.writeParquet(observed.data, warehousePath, mode)
+    }
+    // read only after the write returned: a failed write has already thrown
+    // and never waits on metrics that will not arrive
+    val result = Result(observed.rowCount, observed.report())
+    // cleanup AFTER the successful write, like the reference's final task;
+    // safe because the report is a local relation, not a plan over the input
+    cleanupStagingDir.foreach(d => graft.sources.Staged.cleanup(spark, d))
+    result
   }
 
   /** Reference-compat run: materializes the transformed table to CSV
@@ -161,12 +158,11 @@ object WinePipeline {
     // coerce=True re-casting after pandas' dtype erasure
     val reRead = graft.sources.Staged.readCsv(
       spark, csvStagePath, transformed.schema)
-    val report = Validation.validate(reRead, checks)
-    val reportRows = report.collect().toSeq
-    val materializedReport = spark.createDataFrame(
-      spark.sparkContext.parallelize(reportRows, 1), report.schema)
+    val report = spark.createDataFrame(
+      Validation.validate(reRead, checks).collect().toSeq.asJava,
+      Validation.reportSchema)
     graft.sinks.Sinks.writeParquet(reRead, warehousePath)
-    Result(spark.read.parquet(warehousePath).count(), materializedReport)
+    Result(spark.read.parquet(warehousePath).count(), report)
   }
 
   /** The whisky pipeline stub (reference dags/whisky_etl.py: declares a

@@ -16,7 +16,10 @@ object WineParity {
   /** Q1 — full §2.A transform chain on events:
     * try-cast coerce, drop-null, exact-median impute, literal strip (@),
     * length-with-null-0, pd.cut right-closed binning, dict-encode codes.
-    * One scan + one tiny median aggregate + one broadcast code join.
+    * Building the query runs the median and the type dictionary as two
+    * small aggregates collected to the driver; the plan it returns is one
+    * scan with the median as a literal and a broadcast join against the
+    * local code table.
     */
   val q01: Q = Q(
     "q01_wine_parity",

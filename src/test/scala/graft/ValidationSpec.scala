@@ -39,4 +39,30 @@ class ValidationSpec extends AnyFunSuite {
     assert(rep.getString(3) == "-2.0")
     assert(rep.getString(4) == "-5.0")
   }
+
+  test("the report observed on a write equals validate's rows") {
+    val df = Seq(
+      (Some(60), Some("hello world"), Some(5.0), Some("US")),
+      (Some(40), Some("hi"), Some(-1.0), Some("Narnia")),
+      (None, None, None, None))
+      .toDF("points", "title", "price", "country")
+    // repeated names get _2 suffixes; the null country fails the
+    // non-nullable IsIn
+    val checks = Seq(
+      InRange("points", 50, 100, nullable = false),
+      StrLength("title", 3, 200),
+      Ge("price", 0),
+      Ge("price", 1),
+      IsIn("country", Seq("US", "France")),
+      IsIn("country", Seq("US")))
+    val observed = Validation.observe(df, checks)
+    observed.data.write.format("noop").mode("overwrite").save()
+    val expected = Validation.validate(df, checks)
+    val got = observed.report()
+    assert(got.schema == expected.schema)
+    assert(got.collect().toSeq == expected.collect().toSeq)
+    assert(observed.rowCount == 3)
+    assert(got.collect().map(_.getString(0)).toSeq == Seq("points_in_range",
+      "title_str_length", "price_ge", "price_ge_2", "country_isin", "country_isin_2"))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.WinePipeline
@@ -52,6 +53,56 @@ class WinePipelineSpec extends AnyFunSuite {
     assert(rep("title_str_length") == 1)  // "Hi"
     assert(rep("country_isin") == 2)      // Portugal + Narnia
     assert(rep("price_category_not_null") == 1) // the zero-priced row
+  }
+
+  test("one run is at most 6 jobs and 3 JSON reads") {
+    // the write carries validation and the row count; only the median and
+    // the country dictionary run as their own (small) aggregates
+    val group = "wine-job-graph"
+    val fileBytes = Files.size(java.nio.file.Paths.get(fixture))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val inputBytes = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        inputBytes.put(e.stageInfo.stageId,
+          e.stageInfo.taskMetrics.inputMetrics.bytesRead)
+    }
+    val sc = spark.sparkContext
+    val out = Files.createTempDirectory("wine_jobs").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "WinePipeline.run job graph")
+      try WinePipeline.run(spark, fixture, s"$out/wine_data")
+      finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    val jsonReads = stages.asScala.count(id => inputBytes.getOrDefault(id, 0L) >= fileBytes)
+    assert(jobs.get <= 6, s"${jobs.get} jobs")
+    assert(jsonReads <= 3, s"$jsonReads stages read the whole JSON file")
+  }
+
+  test("a failed write throws its own error, never waits on the report, caches nothing") {
+    graft.sinks.DerbyWarehouse.register()
+    spark.catalog.clearCache()
+    // no create=true: the in-memory database does not exist, so the JDBC
+    // sink fails to connect before any row is written
+    val url = "jdbc:derby:memory:wine_absent"
+    val run = scala.concurrent.Future(
+      WinePipeline.run(spark, fixture, warehousePath = "", jdbcUrl = Some(url)))(
+      scala.concurrent.ExecutionContext.global)
+    val ex = intercept[java.sql.SQLException] {
+      scala.concurrent.Await.result(run, scala.concurrent.duration.Duration(120, "s"))
+    }
+    assert(ex.getMessage.contains("wine_absent"), ex.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   // ---- Kaggle HTTP transport against a local fake server (no egress) ----
